@@ -20,10 +20,6 @@ def roundn(col: Column, n: int = 2) -> Column:
     return F.round(col * p) / p
 
 
-def round2(col: Column) -> Column:
-    return roundn(col, 2)
-
-
 def sql_roundn(expr: str, n: int = 2) -> str:
     p = 10**n
     return f"ROUND(({expr}) * {p}) / {p}"
@@ -216,8 +212,3 @@ def sum_cents(col: Column, n: int = 2, acc: str = "bigint") -> Column:
     if acc.lower() != "bigint":
         term = term.cast("decimal(38,0)")
     return F.sum(term) / float(10**n)
-
-
-def sql_sum_cents(expr: str, n: int = 2) -> str:
-    """Oracle-side twin of ``sum_cents`` (same math, ANSI text)."""
-    return f"SUM({sql_cents(expr, n)}) / 1e{n}"

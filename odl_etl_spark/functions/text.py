@@ -99,20 +99,6 @@ def quality_score(col: Column | str, stopwords: tuple[str, ...] = ("the", "a", "
     )
 
 
-def lang_scores(col: Column | str) -> Column:
-    """Map of language → stopword-hit count for the document."""
-    toks = tokens(col)
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in sorted(LANG_PROFILES)]),
-        F.array(
-            *[
-                F.size(F.filter(toks, lambda t: t.isin(*LANG_PROFILES[lang])))
-                for lang in sorted(LANG_PROFILES)
-            ]
-        ),
-    )
-
-
 def predicted_lang(col: Column | str) -> Column:
     """Argmax language by profile hits; alphabetical tie-break; 'und'
     (undetermined) when no profile hits at all.

@@ -37,10 +37,24 @@ Modes (per-call argument, else session conf ``MODE_CONF``, else local):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+
+from pyspark.sql import DataFrame, SparkSession
 
 MODE_CONF = "spark.odl_etl.materialize.mode"
 _MODES = ("local", "checkpoint", "persist")
+_BYTE_UNITS = {u: 1 << (10 * i) for i, u in enumerate(("", "k", "m", "g", "t", "p"))}
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, read from the
+    public session conf (<= 0: auto-broadcast disabled). The conf is a
+    byte string such as ``10485760``, ``10485760b``, ``10MB`` or ``-1``."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold").strip().lower()
+    m = re.fullmatch(r"(-?\d+)([kmgtp]?)b?", raw)
+    if m is None:
+        raise ValueError(f"unparseable spark.sql.autoBroadcastJoinThreshold: {raw!r}")
+    return int(m.group(1)) * _BYTE_UNITS[m.group(2)]
 
 
 def fits_broadcast(df: DataFrame, rows: int | None = None) -> bool:
@@ -58,11 +72,7 @@ def fits_broadcast(df: DataFrame, rows: int | None = None) -> bool:
     over-estimate of the compressed shuffle bytes AQE compares, i.e.
     errs toward the conservative branch). Pass ``rows`` when the caller
     already counted the frame (saves the count job)."""
-    thr = int(
-        df.sparkSession._jsparkSession.sessionState()
-        .conf()
-        .autoBroadcastJoinThreshold()
-    )
+    thr = broadcast_threshold(df.sparkSession)
     if thr <= 0:  # auto-broadcast disabled: nothing ever broadcasts
         return False
     widths = {

@@ -75,12 +75,13 @@ def pagerank_fixed(
     # two scans/distincts of the source inside the one materialize job.
     # The list is PARTITIONED BY src before the dedup: hashpartitioning
     # on src satisfies the (src, dst) clustering the dedup needs (subset
-    # rule), so dropDuplicates adds no second exchange — and because
-    # (local)checkpoint preserves outputPartitioning, the degree
-    # aggregate, the edge⋈degree join, and every iteration's edge-side
-    # join input all reuse this ONE edge-sized exchange instead of
-    # re-shuffling the edge set per operator/round once the rank table
-    # outgrows the broadcast threshold. Partition count comes from
+    # rule), so dropDuplicates adds no second exchange. The cut below is
+    # taken with AQE on, so it does NOT record this partitioning
+    # (plans/r18/cc_prepart_aqe_probe.txt: an AQE-on (local)checkpoint
+    # reports UnknownPartitioning): the degree aggregate re-exchanges e,
+    # and so does the edge⋈degree join when deg does not broadcast. Only
+    # the ``ed`` cut below records its src partitioning, and only when
+    # the rank table will not broadcast. Partition count comes from
     # spark.sql.shuffle.partitions (scale-adaptive conf).
     e = materialize(
         edges.select(

@@ -97,23 +97,6 @@ class ArtifactSyncConfig:
         )
 
 
-def run_user_map_from_config(spark: SparkSession, cfg: UserMapConfig) -> int:
-    """settings → JDBC scan → salted-hash map → Parquet, the whole
-    reference pipeline from one document."""
-    from odl_etl_spark.io.sources import jdbc_source
-    from odl_etl_spark.pipelines.user_map import run_user_map
-
-    users = jdbc_source(spark, cfg.db_url, query=cfg.query)
-    return run_user_map(
-        users,
-        cfg.out_path,
-        key_col=cfg.key_col,
-        email_col=cfg.email_col,
-        salt=cfg.hash_salt,
-        ds=cfg.ds,
-    )
-
-
 def run_artifact_sync_from_config(
     spark: SparkSession, cfg: ArtifactSyncConfig, transport=None
 ) -> int:

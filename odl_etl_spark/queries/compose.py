@@ -378,8 +378,9 @@ def corpus_curation_funnel(spark, sf_dir):
         "(operators/components.connected_components_incremental — the "
         "contraction step "
         "streaming/ingest_clusters.fold_pairs_into_clusters delegates "
-        "to; the iterative closure runs over the CONTRACTED batch-sized "
-        "graph only, never the full graph). Oracle = the SAME full-"
+        "to; the closure runs over the CONTRACTED batch-sized graph "
+        "only, never the full graph, and on the driver when the batch's "
+        "edges fit under the broadcast threshold). Oracle = the SAME full-"
         "closure recursive CTE as dedup_cluster: incremental ≡ rebuild "
         "IS the claim, so the hash equality against the batch oracle is "
         "the incremental-correctness proof (the dedup_stream_ingest "
@@ -409,10 +410,9 @@ def dedup_cluster_incremental(spark, sf_dir):
     batch_of = F.pmod(F.col("id_a") + F.col("id_b"), F.lit(n_batches))
     labels = connected_components(edges.where(batch_of == 0), "id_a", "id_b")
     for bi in range(1, n_batches):
-        # Each fold scans the standing labels three times (endpoint
-        # resolver, component remap, first-seen anti-join); materialize
-        # keeps the lineage flat across folds, same posture as
-        # connected_components' own per-round truncation.
+        # Each fold scans the standing labels twice (endpoint resolve,
+        # component remap); materialize keeps the lineage flat across
+        # folds instead of nesting every earlier fold's plan.
         labels = materialize(
             connected_components_incremental(
                 labels, edges.where(batch_of == bi), "id_a", "id_b"

@@ -421,9 +421,12 @@ _CLUSTER_ORACLE_SQL = f"""
     doc=(
         "Near-dup cluster assignment — the keep-one step that completes "
         "the dedup ladder. Edges = exact 3-gram Jaccard >= 0.5 pairs "
-        "(stop-shingle bound active); components via iterative min-label "
-        "propagation (operators/components.py): diameter-many rounds of "
-        "join + groupBy-min with per-round localCheckpoint. The fixture "
+        "(stop-shingle bound active); components via "
+        "operators/components.connected_components: an edge table under "
+        "the broadcast threshold (this one) is fetched in one job and "
+        "closed by a min-root union-find on the driver, returned as an "
+        "Arrow LocalRelation; a larger one runs diameter-many rounds of "
+        "join + groupBy-min with a per-round lineage cut. The fixture "
         "graph includes a 3-node component, so transitive closure is "
         "exercised, not just pair mirroring. Oracle = DuckDB recursive "
         "CTE over the same edge SQL. cluster_id = min doc_id reachable; "

@@ -8,7 +8,8 @@ re-running connected components over every pair ever seen.
 ``fold_pairs_into_clusters`` folds the not-yet-folded batches into a
 standing (node, component) store via
 ``operators/components.connected_components_incremental`` — the
-iterative closure runs over the CONTRACTED batch-sized graph only.
+closure runs over the CONTRACTED batch-sized graph only, on the driver
+when the batch's edges fit under the broadcast threshold.
 
 Crash/replay posture (same discipline as the rest of the ingest tier):
 
@@ -31,7 +32,7 @@ Crash/replay posture (same discipline as the rest of the ingest tier):
     would scatter rows across wrong partitions silently.
 
 At 100 TB: the pairs tables scale with duplicate volume and the
-contracted graph with the batch — the full-graph CC ITERATION never
+contracted graph with the batch — the full-graph CC closure never
 reruns. The per-fold WRITE is O(|labels|) (the price of the atomic
 swap; labels are 16-byte rows, and a deployment folds every K batches,
 amortizing it); the store stays hash-sharded by ``_shard`` inside the

@@ -69,6 +69,10 @@ def main() -> int:
             .config("spark.ui.enabled", "false")
             .config("spark.sql.shuffle.partitions", "8")
             .config("spark.sql.adaptive.enabled", "true")
+            # The 600-edge graph fits under the broadcast threshold, so
+            # connected_components would close it on the driver before
+            # the kill lands; auto-broadcast off forces the round loop.
+            .config("spark.sql.autoBroadcastJoinThreshold", "-1")
             .getOrCreate()
         )
     except Exception as e:  # pragma: no cover - environment-dependent

@@ -24,6 +24,29 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def cc_path(spark):
+    """``with cc_path(path):`` runs connected components on one path:
+    "local" (the driver union-find, default conf) or "loop" (the
+    distributed rounds, forced by turning auto-broadcast off)."""
+    from contextlib import contextmanager
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextmanager
+    def use(path):
+        assert path in ("local", "loop"), path
+        old = spark.conf.get(key)
+        if path == "loop":
+            spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return use
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
 

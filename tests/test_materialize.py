@@ -93,9 +93,10 @@ def test_enable_durable_materialize_one_call(spark, tmp_path):
         _clear_checkpoint_dir(spark)
 
 
-def test_iterative_consumer_is_mode_agnostic(spark, tmp_path):
+def test_iterative_consumer_is_mode_agnostic(spark, cc_path, tmp_path):
     """connected_components routes every cut through materialize();
-    its output must be identical under all three modes."""
+    its output must be identical under all three modes, on the driver
+    path and on the forced distributed loop."""
     from odl_etl_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
@@ -104,8 +105,13 @@ def test_iterative_consumer_is_mode_agnostic(spark, tmp_path):
     want = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20)}
 
     def run():
-        got = connected_components(edges)
-        return {(r["node"], r["component"]) for r in got.collect()}
+        got = {}
+        for path in ("local", "loop"):
+            with cc_path(path):
+                out = connected_components(edges)
+                got[path] = {(r["node"], r["component"]) for r in out.collect()}
+        assert got["local"] == got["loop"]
+        return got["loop"]
 
     assert run() == want  # local (default)
     spark.sparkContext.setCheckpointDir(str(tmp_path / "cc_ckpt"))
@@ -193,3 +199,24 @@ def test_materialize_prepartitioned_records_partitioning(spark):
         assert got == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+
+
+def test_broadcast_threshold_reads_public_byte_string_conf(spark):
+    """The threshold comes from the public conf in any byte-string form
+    Spark accepts; -1 (auto-broadcast off) stays negative."""
+    from odl_etl_spark.operators.materialize import broadcast_threshold
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for raw, want in [
+            ("10MB", 10 << 20),
+            ("10485760b", 10485760),
+            ("2g", 2 << 30),
+            ("4096", 4096),
+            ("-1", -1),
+        ]:
+            spark.conf.set(key, raw)
+            assert broadcast_threshold(spark) == want, raw
+    finally:
+        spark.conf.set(key, old)

@@ -197,8 +197,8 @@ def test_connected_components_transitive_chain(spark):
 def test_connected_components_prepartition_branch_same_labels(spark):
     """The r18 adaptive pre-partition (pay the upfront edge exchange
     only when the label table will not broadcast) is plan-only: forcing
-    the non-broadcast branch via autoBroadcastJoinThreshold=-1 yields
-    the identical labeling."""
+    the loop's non-broadcast branch via autoBroadcastJoinThreshold=-1
+    yields the labeling of the default conf's driver path."""
     from odl_etl_spark.operators.components import (
         _fits_broadcast,
         connected_components,
@@ -225,6 +225,29 @@ def test_connected_components_prepartition_branch_same_labels(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     assert got == want
+
+
+def test_small_graph_components_plan_as_local_relation(spark):
+    """The driver path hands its labels back as an Arrow-backed
+    LocalRelation, which the planner sizes exactly, not as a LogicalRDD
+    (a createDataFrame(list) relation sized at Long.MaxValue that a
+    Python worker unpickles on every read)."""
+    from odl_etl_spark.operators.components import (
+        connected_components,
+        connected_components_incremental,
+    )
+
+    edges = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "src long, dst long")
+    labels = connected_components(edges)
+    folded = connected_components_incremental(
+        labels, spark.createDataFrame([(2, 5), (8, 9)], "src long, dst long")
+    )
+    for out in (labels, folded):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert {(r.node, r.component) for r in folded.collect()} == {
+        (0, 0), (1, 0), (2, 0), (5, 0), (6, 0), (8, 8), (9, 8)
+    }
 
 
 def test_knn_join_matches_brute_force(spark, sf_dir):

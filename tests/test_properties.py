@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -208,14 +209,22 @@ def test_asof_join_matches_bruteforce(spark, left_rows, right_rows):
         max_size=20,
     )
 )
-def test_connected_components_matches_union_find(spark, edges):
-    """Label propagation must agree with a direct union-find on random
-    small graphs (self-loops and duplicate edges included): every node
-    labeled with the minimum id of its component."""
+def test_connected_components_matches_union_find(spark, cc_path, edges):
+    """Both paths — the driver union-find and the distributed loop — must
+    agree with a direct union-find on random small graphs (self-loops and
+    duplicate edges included), and with each other on the schema: every
+    node labeled with the minimum id of its component."""
     from odl_etl_spark.operators.components import connected_components
 
     e = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.component for r in connected_components(e).collect()}
+    runs = {}
+    for path in ("local", "loop"):
+        with cc_path(path):
+            out = connected_components(e)
+            runs[path] = ({r.node: r.component for r in out.collect()}, out.schema)
+    assert runs["local"][1] == runs["loop"][1]
+    got = runs["local"][0]
+    assert runs["loop"][0] == got
 
     parent = {}
 
@@ -232,6 +241,60 @@ def test_connected_components_matches_union_find(spark, edges):
             parent[max(ra, rb)] = min(ra, rb)
     want = {n: min(m for m in parent if find(m) == find(n)) for n in parent}
     assert got == want
+
+
+@pytest.mark.parametrize("path", ["local", "loop"])
+def test_connected_components_null_endpoint_merges_nothing(spark, cc_path, path):
+    """A null endpoint never equi-joins, so it merges nothing:
+    (1,null),(2,null) leaves 1 and 2 apart, and the null node keeps its
+    seed label, the minimum of its direct neighbors."""
+    from odl_etl_spark.operators.components import connected_components
+
+    e = spark.createDataFrame([(1, None), (2, None)], "src long, dst long")
+    with cc_path(path):
+        out = connected_components(e)
+        got = {(r.node, r.component) for r in out.collect()}
+    assert got == {(1, 1), (2, 2), (None, 1)}
+    assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+
+
+def test_incremental_components_null_endpoint_same_on_both_paths(spark, cc_path):
+    from odl_etl_spark.operators.components import (
+        connected_components,
+        connected_components_incremental,
+    )
+
+    old = spark.createDataFrame([(1, 2), (3, None)], "src long, dst long")
+    new = spark.createDataFrame([(2, None), (7, 3)], "src long, dst long")
+    runs = []
+    for path in ("local", "loop"):
+        with cc_path(path):
+            out = connected_components_incremental(connected_components(old), new)
+            runs.append((sorted(out.collect(), key=str), out.schema))
+    assert runs[0] == runs[1]
+
+
+@pytest.mark.parametrize("path", ["local", "loop"])
+def test_components_keep_string_node_type(spark, cc_path, path):
+    """String ids close to the lexicographic minimum (the driver path
+    compares code points, Spark compares UTF-8 bytes: the same order)
+    and keep their type through the incremental fold."""
+    from odl_etl_spark.operators.components import (
+        connected_components,
+        connected_components_incremental,
+    )
+
+    schema = "src string, dst string"
+    old = spark.createDataFrame([("b", "a"), ("c", "d"), ("x", "é")], schema)
+    new = spark.createDataFrame([("d", "b"), ("z", "y")], schema)
+    with cc_path(path):
+        labels = connected_components(old)
+        folded = connected_components_incremental(labels, new)
+        got = {(r.node, r.component) for r in folded.collect()}
+    want = {(n, "a") for n in "abcd"} | {("x", "x"), ("é", "x")}
+    assert got == want | {("y", "y"), ("z", "y")}
+    for out in (labels, folded):
+        assert out.schema.simpleString() == "struct<node:string,component:string>"
 
 
 def test_minhash_pairs_invariant_under_repartition(spark, sf_dir):
@@ -518,14 +581,15 @@ def test_ivfpq_append_equals_reencode_any_split(spark, sf_dir, mod, rem):
     st.integers(min_value=0, max_value=29),
 )
 def test_incremental_components_equal_rebuild_any_graph_any_split(
-    spark, edges, cut
+    spark, cc_path, edges, cut
 ):
     """Property: for ANY undirected graph and ANY old/new edge split,
     folding the new edges into the old labeling via
     connected_components_incremental is bit-identical to rebuilding the
     closure over the union — the contraction argument (every standing
     representative is already its component's minimum) holds on
-    arbitrary topologies, not just near-dup-shaped ones."""
+    arbitrary topologies, not just near-dup-shaped ones. Checked on the
+    driver path and on the forced distributed loop."""
     from odl_etl_spark.operators.components import (
         connected_components,
         connected_components_incremental,
@@ -535,16 +599,19 @@ def test_incremental_components_equal_rebuild_any_graph_any_split(
     cut = min(cut, len(es) - 1)
     old_es, new_es = es[: cut + 1], es[cut + 1 :]
     old = spark.createDataFrame(old_es, "src bigint, dst bigint")
-    labels = connected_components(old)
-    if new_es:
-        new = spark.createDataFrame(new_es, "src bigint, dst bigint")
-        got = connected_components_incremental(labels, new)
-        want = connected_components(old.unionByName(new))
-    else:
-        got, want = labels, connected_components(old)
-    assert {(r["node"], r["component"]) for r in got.collect()} == {
-        (r["node"], r["component"]) for r in want.collect()
-    }
+    for path in ("local", "loop"):
+        with cc_path(path):
+            labels = connected_components(old)
+            if new_es:
+                new = spark.createDataFrame(new_es, "src bigint, dst bigint")
+                got = connected_components_incremental(labels, new)
+                want = connected_components(old.unionByName(new))
+            else:
+                got, want = labels, connected_components(old)
+            assert got.schema == want.schema, path
+            assert {(r["node"], r["component"]) for r in got.collect()} == {
+                (r["node"], r["component"]) for r in want.collect()
+            }, path
 
 
 _VOCAB = (
